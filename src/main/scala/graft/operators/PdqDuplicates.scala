@@ -203,8 +203,24 @@ object PdqDuplicates {
         // expand hash-level edges to index pairs; for the probe-all case
         // hashEdges is symmetric already (kernel/θ/banding emit both
         // orders and self pairs), for the checked case mirror edges so
-        // unchecked partners are annotated too (`pdq_hash.py:56-65`)
+        // unchecked partners are annotated too (`pdq_hash.py:56-65`).
+        //
+        // Partitioning: hashEdges is small (one row per near-duplicate
+        // hash pair), but each row expands to |members(phash)| ×
+        // |members(chash)| index pairs, so the quadratic output is made
+        // by whichever tasks stream hashEdges through the two joins.
+        // hashEdges inherits the partitioning of a distinct over hashes,
+        // which AQE coalesces into ONE partition (it is a few KB), so a
+        // single task would emit every pair.
+        // An explicit repartition to the default parallelism is a
+        // REPARTITION_BY_NUM exchange, which AQE does not coalesce. It is
+        // keyed by phash alone: keyed by (phash, chash) the optimizer
+        // folds it into the distinct's own exchange, which AQE then
+        // coalesces again. A column key, unlike round-robin, places every
+        // row the same way when a task is retried. The limit that
+        // remains: all pairs of one hash edge come from one task.
         val raw = hashEdges
+          .repartition(spark.sparkContext.defaultParallelism, col("phash"))
           .join(probeIdx.select(col("index").as("src"), col("chash").as("phash")), Seq("phash"))
           .join(indexed.select(col("index").as("dst"), col("chash")), Seq("chash"))
           .select("src", "dst", "dist")
@@ -319,6 +335,7 @@ object PdqDuplicates {
       case Checked.Frame(c)       => indexed.join(c.select("index"), Seq("index"), "left_semi")
     }
     val probeHashes = probeIdx.select(col("chash").as("phash")).distinct()
+    val probesAreCorpus = checked == Checked.All
 
     // step 4: similarity join at hash level -> (phash, chash, dist)
     val hashEdges: DataFrame =
@@ -355,9 +372,9 @@ object PdqDuplicates {
           case _ if n >= 64 =>
             // banding needs n+1 <= 64 nibble bands; past that the candidate
             // set degenerates, the θ-join is the honest plan.
-            naiveHashJoin(probeHashes, corpusHashes, n)
-          case Strategy.Banded => bandedHashJoin(probeHashes, corpusHashes, n)
-          case _               => naiveHashJoin(probeHashes, corpusHashes, n)
+            naiveHashJoin(probeHashes, corpusHashes, n, probesAreCorpus)
+          case Strategy.Banded => bandedHashJoin(probeHashes, corpusHashes, n, probesAreCorpus)
+          case _               => naiveHashJoin(probeHashes, corpusHashes, n, probesAreCorpus)
         }
       }
 
@@ -417,16 +434,6 @@ object PdqDuplicates {
       .orderBy("index")
   }
 
-  /** Distinct-hash frames with the packed 32-byte decoding materialized
-    * behind a lineage cut: Catalyst would otherwise inline the hex
-    * parsing past the join and re-parse PER CANDIDATE PAIR — under
-    * banding skew (shared bands, e.g. all-zero tails) that is the
-    * difference between O(pairs) integer XORs and O(pairs) string
-    * parses. The frames are distinct hashes, so the materialization is
-    * small by construction. The distance kernel is the engine's native
-    * codegen'd [[graft.plans.HammingDistance]] over BinaryType — values
-    * are identical to the `array<bigint>`-words formulation (property-
-    * tested), so the DuckDB oracles are unaffected. */
   /** Hashes decomposed into eight PRIMITIVE long columns (32 bits
     * each), materialized behind a lineage cut. In the all-pairs
     * nested-loop, array- or binary-typed payloads pay an allocation per
@@ -436,6 +443,19 @@ object PdqDuplicates {
   private def withWordCols(df: DataFrame, hashCol: String, prefix: String): DataFrame =
     Materialize(df.select(col("*") +: (0 until WordsPerHash).map(i =>
       conv(col(hashCol).substr(i * 8 + 1, 8), 16, 10).cast("long").as(s"$prefix$i")): _*))
+
+  /** The (probe, corpus) word frames of the hash joins. When the probe
+    * set is the corpus both sides are the same distinct relation: it is
+    * materialized once and the probe side renames its columns. */
+  private def wordFrames(probes: DataFrame, corpus: DataFrame, probesAreCorpus: Boolean)
+      : (DataFrame, DataFrame) = {
+    val corpusW = withWordCols(corpus, "chash", "cw")
+    val probeW =
+      if (probesAreCorpus) corpusW.select(col("chash").as("phash") +:
+        (0 until WordsPerHash).map(i => col(s"cw$i").as(s"pw$i")): _*)
+      else withWordCols(probes, "phash", "pw")
+    (probeW, corpusW)
+  }
 
   private def wordColsDist(n: Int = WordsPerHash): Column =
     (0 until n).map(i => bit_count(col(s"pw$i").bitwiseXOR(col(s"cw$i")))).reduce(_ + _)
@@ -479,15 +499,17 @@ object PdqDuplicates {
     * non-dup pairs have expected prefix distance 64, so codegen's &&
     * short-circuit skips the second half's XOR+popcount for real
     * thresholds (n ≈ 51 at sim 0.8). */
-  private def naiveHashJoin(probes: DataFrame, corpus: DataFrame, n: Int): DataFrame = {
+  private def naiveHashJoin(probes: DataFrame, corpus: DataFrame, n: Int,
+      probesAreCorpus: Boolean): DataFrame = {
     val cap = probes.sparkSession.conf
       .get(KernelMaxCorpusKey, KernelMaxCorpusDefault.toString).toInt
-    def thetaJoin =
-      withWordCols(probes, "phash", "pw")
-        .join(withWordCols(corpus, "chash", "cw"),
-          wordColsPrefixDist(WordsPerHash / 2) <= n && wordColsDist() <= n)
+    def thetaJoin = {
+      val (probeW, corpusW) = wordFrames(probes, corpus, probesAreCorpus)
+      probeW
+        .join(corpusW, wordColsPrefixDist(WordsPerHash / 2) <= n && wordColsDist() <= n)
         .withColumn("dist", wordColsDist())
         .select("phash", "chash", "dist")
+    }
     if (estimateRows(corpus) > BigInt(cap) * 4) thetaJoin
     else {
       val collected = corpus.limit(cap + 1).collect()
@@ -571,10 +593,10 @@ object PdqDuplicates {
     * k=51), processes only the near-duplicate survivors. m = largest of
     * 4/2 dividing nBands (keeps wide bands word-aligned); m = 1 falls
     * back to the flat shape. */
-  private[operators] def bandedHashJoin(probes: DataFrame, corpus: DataFrame, n: Int): DataFrame = {
+  private[operators] def bandedHashJoin(probes: DataFrame, corpus: DataFrame, n: Int,
+      probesAreCorpus: Boolean): DataFrame = {
     val nBands = n + 1
-    val probeW = withWordCols(probes, "phash", "pw")
-    val corpusW = withWordCols(corpus, "chash", "cw")
+    val (probeW, corpusW) = wordFrames(probes, corpus, probesAreCorpus)
     val m = if (nBands % 4 == 0) 4 else if (nBands % 2 == 0) 2 else 1
     // candidate rows carry ONLY the hash strings (plus, for m > 1, the
     // wide-band words) through the (possibly skewed) band join; full

@@ -91,7 +91,8 @@ object ProfileDetect {
       val corpusHashes = indexed.select("chash").distinct()
       val probeHashes = indexed.select(col("chash").as("phash")).distinct()
       time("pdq distinct hashes")(noop(corpusHashes))
-      val hashEdges = PdqDuplicates.bandedHashJoin(probeHashes, corpusHashes, 5)
+      val hashEdges = PdqDuplicates.bandedHashJoin(probeHashes, corpusHashes, 5,
+        probesAreCorpus = true)
       time("pdq banded hashEdges")(noop(hashEdges))
       val raw = hashEdges
         .join(indexed.select(col("index").as("src"), col("chash").as("phash")), Seq("phash"))

@@ -33,7 +33,7 @@ class EdgesSpec extends SparkTestBase {
       assert(flat.nonEmpty)
     }
 
-    for (s <- Seq(Strategy.Naive, Strategy.Banded)) {
+    for (s <- Seq(Strategy.Naive, Strategy.Banded, Strategy.Auto)) {
       test(s"pdq edges ≡ exploded arrays [checked=$label, $s]") {
         val arrays = explodePdq(PdqDuplicates(pdqOnly, checked, Fixtures.threshold, s))
         val flat = PdqDuplicates.edges(pdqOnly, checked, Fixtures.threshold, s)
@@ -56,6 +56,33 @@ class EdgesSpec extends SparkTestBase {
       def key(t: (String, String, String, Double)) =
         (t._1, t._2, t._3, if (t._4.isNaN) -1.0 else t._4)
       assert(flat.map(key) == (urlArr ++ pdqArr).map(key))
+    }
+  }
+
+  /** The benchmark's shape in small: 20 cliques of 100 rows over four
+    * partitions. Each clique carries two hashes 1 bit apart (every fifth
+    * member on the variant); cliques lie about 128 bits apart, so the
+    * edges are exactly the 20·100·99 ordered in-clique pairs. */
+  private def cliques: DataFrame = {
+    val rnd = new scala.util.Random(7)
+    val rows = for {
+      c <- 0 until 20
+      base = Seq.fill(4)(f"${rnd.nextLong()}%016x").mkString
+      variant = base.init + (if (base.last == '0') "1" else "0")
+      m <- 0 until 100
+    } yield (f"c$c%02d_m$m%03d", Seq(if (m % 5 == 0) variant else base))
+    spark.createDataFrame(rows).toDF("index", "pdq_hash").repartition(4)
+  }
+
+  for (s <- Seq(Strategy.Naive, Strategy.Banded, Strategy.Auto); fixed <- Seq(true, false)) {
+    test(s"pdq edges on 20 cliques × 100: every in-clique pair once, ≡ arrays [$s, assumeFixed256=$fixed]") {
+      val df = cliques
+      val flat = PdqDuplicates.edges(df, None, 0.98, s, assumeFixed256 = fixed)
+        .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
+      assert(flat.length == 20 * 100 * 99)
+      assert(flat.map(e => (e._1, e._2)).distinct.length == flat.length)
+      assert(flat.forall { case (i, p, _) => i != p && i.take(3) == p.take(3) })
+      assert(flat.toSet == explodePdq(PdqDuplicates(df, None, 0.98, s, assumeFixed256 = fixed)))
     }
   }
 

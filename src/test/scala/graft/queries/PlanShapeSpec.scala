@@ -476,6 +476,42 @@ class PlanShapeSpec extends SparkTestBase {
     assert(!p.contains("BroadcastNestedLoopJoin"), s"fell back to a row-iterator BNLJ:\n$p")
   }
 
+  test("detect_full: the PDQ pair expansion streams a REPARTITION_BY_NUM exchange on phash") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val root = graft.SparkEntry.queries("detect_full")(spark, dir).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    def joinOn(key: String)(p: SparkPlan): Boolean = p match {
+      case j: BaseJoinExec => j.leftKeys.exists {
+        case a: Attribute => a.name == key
+        case _ => false
+      }
+      case _ => false
+    }
+    // hash edges expand to index pairs through a join on phash, then
+    // one on chash; the stream feeding them must be spread by a
+    // fixed-count exchange (AQE coalesces an ENSURE_REQUIREMENTS one
+    // down to a single task) keyed by phash
+    val parts = spark.sparkContext.defaultParallelism
+    def spread(p: SparkPlan): Boolean = p match {
+      case e: ShuffleExchangeExec => e.shuffleOrigin == REPARTITION_BY_NUM && (e.outputPartitioning match {
+        case HashPartitioning(Seq(a: Attribute), n) => a.name == "phash" && n == parts
+        case _ => false
+      })
+      case _ => false
+    }
+    val found = root.collect { case c if joinOn("chash")(c) => c }
+      .flatMap(_.collect { case j if joinOn("phash")(j) => j })
+      .exists(_.find(spread).isDefined)
+    assert(found, s"no REPARTITION_BY_NUM exchange on phash beneath the expansion joins:\n$root")
+  }
+
   test("curation_dispositions: membership joins carry ids only — no text column moves") {
     val df = graft.SparkEntry.queries("curation_dispositions")(spark, dir)
     val p = df.queryExecution.executedPlan.toString
